@@ -21,9 +21,12 @@ import sys
 import time
 
 #: heap share of MemTotal; the machine is shared, so stay well below it
-HEAP_FRACTION = 0.25
-#: pre-touch only while the whole heap fits this share of MemAvailable
-PRETOUCH_FIT = 0.5
+#: (the workloads' old generation peaks near 150 MB)
+HEAP_FRACTION = 0.125
+#: pre-touch only while the whole heap fits this share of MemTotal. Both
+#: are fixed properties of the host, so every run on it gets the same
+#: posture.
+PRETOUCH_FIT = 0.25
 
 
 def _meminfo_kb(key: str) -> int:
@@ -38,8 +41,9 @@ def resolve_posture(root: str, work: str) -> dict:
     """Size the session to this host through the environment
     ``get_spark`` reads, and keep every scratch write under ``work``."""
     cpus = len(os.sched_getaffinity(0))
-    heap_mb = max(1024, int(_meminfo_kb("MemTotal") / 1024 * HEAP_FRACTION) // 256 * 256)
-    pretouch = heap_mb <= _meminfo_kb("MemAvailable") / 1024 * PRETOUCH_FIT
+    total_mb = _meminfo_kb("MemTotal") / 1024
+    heap_mb = max(1024, int(total_mb * HEAP_FRACTION) // 256 * 256)
+    pretouch = heap_mb <= total_mb * PRETOUCH_FIT
     tmp = os.path.join(work, "tmp")
     os.makedirs(tmp, exist_ok=True)
     paths = [root] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
@@ -60,7 +64,7 @@ def resolve_posture(root: str, work: str) -> dict:
     tempfile.tempdir = tmp
     if root not in sys.path:
         sys.path.insert(0, root)
-    return {"cores": cpus, "heap_mb": heap_mb, "pretouch": pretouch}
+    return {"cores": cpus, "heap_mb": heap_mb, "pretouch": pretouch, "mem_total_mb": round(total_mb)}
 
 
 def versions(spark) -> dict:
@@ -193,7 +197,7 @@ class Spans:
             self.items.append(rec)
 
     def boundary(self) -> None:
-        """Phase boundary: sample the JVM old generation."""
+        """End of a part: sample the JVM old generation."""
         if self.spark is not None:
             self.mem_mb.append(jvm_old_gen_mb(self.spark))
 

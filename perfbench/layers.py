@@ -1,64 +1,42 @@
 """Per-layer metrics of the traced run.
 
-Every traced run reports every metric in ``SPEC``; a layer its workload
+Every traced run reports every ``per_layer`` metric of BENCHMARK.json,
+which names them with their units and directions; a layer its workload
 does not exercise reads 0, which is the prediction for that pairing.
 METRICS.md maps each layer to the end-to-end metrics it should move.
 """
 
 from __future__ import annotations
 
+import json
+import os
+
 from harness import median
 from wl_queries import SUITE
 
+HERE = os.path.dirname(os.path.abspath(__file__))
+
 KINDS = ("json", "csv", "gzip")
-COMPACTION_FIELDS = (
-    ("jobs", "count"), ("driver_s", "s"), ("executor_cpu_s", "s"), ("input_bytes_ratio", "ratio"),
-    ("shuffle_write_bytes", "bytes"), ("write_tasks", "count"), ("task_skew", "ratio"),
-)
-STREAM_FIELDS = (
-    ("batches", "count"), ("batch_p50_s", "s"), ("jobs_per_batch", "count"),
-    ("driver_s_per_batch", "s"), ("files_per_batch", "count"), ("empty_batch_ratio", "ratio"),
-)
-CURATE_FIELDS = (
-    ("batch_p50_s", "s"), ("jobs_per_batch", "count"), ("driver_s_per_batch", "s"),
-    ("executor_cpu_s_per_batch", "s"), ("input_bytes_per_batch", "bytes"),
-    ("output_bytes_per_batch", "bytes"),
-)
+COMPACTION_FIELDS = ("jobs", "driver_s", "executor_cpu_s", "input_bytes_ratio",
+                     "shuffle_write_bytes", "write_tasks", "task_skew")
 
 
-def _spec() -> list[tuple[str, str, str]]:
-    """``(name, unit, better)`` for every per-layer metric."""
-    out = [("session.get_spark_s", "s", "lower")]
-    out += [(f"compat.collect_s.{k}", "s", "lower") for k in KINDS] + [("compat.flush_s", "s", "lower")]
-    # more write tasks means the codec-bound write runs wider
-    out += [(f"compaction.{k}.{f}", u, "higher" if f == "write_tasks" else "lower")
-            for k in KINDS for f, u in COMPACTION_FIELDS]
-    for q in SUITE:
-        short = q.split("_", 1)[0]
-        out += [(f"plans.{short}.wall_s", "s", "lower"), (f"plans.{short}.jobs", "count", "lower")]
-        if int(short[1:]) >= 18:
-            out.append((f"plans.{short}.driver_s", "s", "lower"))
-    out += [(f"plans.{f}", u, "lower") for f, u in
-            (("executor_cpu_s", "s"), ("gc_s", "s"), ("shuffle_bytes", "bytes"), ("spill_bytes", "bytes"))]
-    out += [(f"io.jobs_concurrent_max.{w}", "count", "higher") for w in ("query_suite", "stream_curate")]
-    # more files per batch means fixed batch cost is better amortised
-    out += [(f"stream_compact.{f}", u, "higher" if f == "files_per_batch" else "lower")
-            for f, u in STREAM_FIELDS]
-    out += [(f"curate.{f}", u, "lower") for f, u in CURATE_FIELDS]
-    out.append(("trace.latency_s", "s", "lower"))
-    return out
+def _spec() -> list[tuple[str, str]]:
+    """``(name, unit)`` of every per-layer metric, from the manifest."""
+    with open(os.path.join(os.path.dirname(HERE), "BENCHMARK.json")) as f:
+        return [(m["name"], m["unit"]) for m in json.load(f)["per_layer"]]
 
-
-SPEC = _spec()
 
 def _mean(xs) -> float:
     xs = list(xs)
     return sum(xs) / len(xs) if xs else 0.0
 
 
-def per_layer(folded: list[dict], res: dict, get_spark_s: float) -> dict:
-    """Fold the traced spans into ``{name: (value, unit)}`` over SPEC."""
-    vals: dict[str, float] = {"session.get_spark_s": get_spark_s, "trace.latency_s": res["latency_s"]}
+def per_layer(folded: list[dict], parts: dict, get_spark_s: float) -> dict:
+    """Fold the traced spans into ``{name: (value, unit)}`` over the
+    manifest's per-layer metrics; ``parts`` maps each part run to its
+    result."""
+    vals: dict[str, float] = {"session.get_spark_s": get_spark_s}
     by = {}
     for sp in folded:
         by.setdefault(sp["name"], []).append(sp)
@@ -68,8 +46,8 @@ def per_layer(folded: list[dict], res: dict, get_spark_s: float) -> dict:
         if not calls:
             continue
         vals[f"compat.collect_s.{k}"] = median([c["wall_s"] for c in calls])
-        lake_bytes = res["inputs"]["json" if k == "json" else "csv"]["bytes"]
-        for f, _ in COMPACTION_FIELDS:
+        lake_bytes = parts["lake_compact"]["inputs"]["json" if k == "json" else "csv"]["bytes"]
+        for f in COMPACTION_FIELDS:
             if f == "input_bytes_ratio":
                 v = _mean(c["input_bytes"] for c in calls) / lake_bytes
             elif f == "task_skew":
@@ -82,7 +60,7 @@ def per_layer(folded: list[dict], res: dict, get_spark_s: float) -> dict:
 
     plan_spans = [sp for sp in folded if sp.get("layer") == "plans"]
     if plan_spans:
-        passes = max(1, res.get("passes", 1))
+        passes = max(1, parts["query_suite"]["passes"])
         for q in SUITE:
             short = q.split("_", 1)[0]
             mine = by.get(f"plans.{q}", [])
@@ -114,4 +92,4 @@ def per_layer(folded: list[dict], res: dict, get_spark_s: float) -> dict:
         vals["curate.output_bytes_per_batch"] = _mean(b["output_bytes"] for b in full)
         vals["io.jobs_concurrent_max.stream_curate"] = max(b["jobs_concurrent_max"] for b in full)
 
-    return {name: (float(vals.get(name, 0.0)), unit) for name, unit, _ in SPEC}
+    return {name: (float(vals.get(name, 0.0)), unit) for name, unit in _spec()}

@@ -7,57 +7,71 @@ through its public functions (``session.get_spark``, the compat
 collector/flusher, ``plans.QUERIES``, ``streaming.compaction`` and
 ``streaming.curation``); every number is timed around those calls.
 
+A workload runs two parts in one session, a closed-loop batch part and
+a streaming part: ``compaction`` is ``lake_compact`` then
+``stream_compact``, ``query_curate`` is ``query_suite`` then
+``stream_curate``. ``batch_s`` is the batch part's latency,
+``stream_s`` the streaming part's (see METRICS.md).
+
 ``--trace 0`` prints the end-to-end metrics; ``--trace 1`` enables the
 Spark event log, folds it into the harness spans and prints the
 per-layer metrics. The last stdout line is the result object; the line
-before it carries the per-workload detail metrics, the resolved host
+before it carries every part's detail metrics, the resolved host
 posture and any correctness problems.
 """
 
 from __future__ import annotations
 
 import argparse
-import contextlib
+import glob
+import hashlib
+import importlib
 import json
 import os
 import shutil
 import signal
+import statistics
 import sys
+import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
 
-WORKLOADS = ("lake_compact", "query_suite", "stream_compact", "stream_curate")
+#: workload -> its two parts (part name -> module), timed in this order
+#: in one session after their warm-ups.
+WORKLOADS = {
+    "compaction": {"lake_compact": "wl_lake", "stream_compact": "wl_stream"},
+    "query_curate": {"query_suite": "wl_queries", "stream_curate": "wl_curate"},
+}
+#: the gated figure each part's latency is
+ROLE = {"lake_compact": "batch_s", "stream_compact": "stream_s",
+        "query_suite": "batch_s", "stream_curate": "stream_s"}
+#: share of ``--seconds`` each part measures for
+SHARE = {"lake_compact": 0.3, "stream_compact": 0.7, "query_suite": 0.4, "stream_curate": 0.6}
 #: fresh-JVM ``get_spark`` calls per run; ``setup_s`` is their median
 SETUP_SAMPLES = 3
-#: end-to-end metrics every workload reports: name -> unit. What
-#: ``latency_s`` and ``throughput_per_s`` count is each workload's own
-#: unit of work (see METRICS.md).
-END_TO_END = {"setup_s": "s", "latency_s": "s", "throughput_per_s": "1/s", "peak_mem_mb": "MB"}
+#: the timed figures a traced run is compared on
+TIMED = ("batch_s", "stream_s")
+
+
+def _end_to_end() -> dict:
+    """Gated metric name -> unit, from the manifest."""
+    with open(os.path.join(os.path.dirname(HERE), "BENCHMARK.json")) as f:
+        return {m["name"]: m["unit"] for m in json.load(f)["end_to_end"]}
 
 
 @dataclass
 class Context:
-    """What a workload gets: the session, its seed and time budget, a
-    scratch dir and the span recorder."""
+    """What a part gets: the session, its seed and share of the run's
+    seconds, a scratch dir and the span recorder."""
 
     spark: object
     spans: object
     seed: int
-    seconds: int
+    seconds: float
     work: str
-
-
-def _workload_module(name: str):
-    import importlib
-
-    return importlib.import_module({
-        "lake_compact": "wl_lake",
-        "query_suite": "wl_queries",
-        "stream_compact": "wl_stream",
-        "stream_curate": "wl_curate",
-    }[name])
 
 
 def main(argv=None) -> int:
@@ -102,6 +116,7 @@ def main(argv=None) -> int:
     spark = None
     # a terminated run still stops its JVM and removes its scratch dir
     signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
+    t_run = time.perf_counter()
     try:
         setup = []
         for _ in range(SETUP_SAMPLES - 1):
@@ -111,40 +126,60 @@ def main(argv=None) -> int:
         spark, dt = harness.start_session(f"perfbench-{args.workload}", extra_conf)
         setup.append(dt)
         spans.spark = spark
-        spans.boundary()
         posture.update(harness.versions(spark))
-        ctx = Context(spark, spans, args.seed, args.seconds, work)
-        res = _workload_module(args.workload).run(ctx)
-        spans.boundary()
+        mods, ctxs = {}, {}
+        for part, module in WORKLOADS[args.workload].items():
+            mods[part] = importlib.import_module(module)
+            ctxs[part] = Context(spark, spans, args.seed, args.seconds * SHARE[part],
+                                 os.path.join(work, part))
+            os.makedirs(ctxs[part].work)
+        wall = {"setup": time.perf_counter() - t_run}
+        # the parts' untimed warm-ups (inputs, cold passes, the correctness
+        # check of the query suite) overlap; then each part is timed alone
+        t0 = time.perf_counter()
+        with ThreadPoolExecutor(len(mods)) as pool:
+            pending = {p: pool.submit(m.warm, ctxs[p]) for p, m in mods.items()}
+            states = {p: f.result() for p, f in pending.items()}
+        wall["warm"] = time.perf_counter() - t0
+        parts = {}
+        for part, mod in mods.items():
+            t0 = time.perf_counter()
+            parts[part] = mod.run(ctxs[part], states[part])
+            wall[part] = time.perf_counter() - t0
+            spans.boundary()
         py_mb, jvm_mb = harness.py_hwm_mb(), max(spans.mem_mb)
         harness.stop_session(spark)
         spark = None
 
-        attempted, failed = res["attempted"], res["failed"]
-        values = {"setup_s": harness.median(setup), "latency_s": res["latency_s"],
-                  "throughput_per_s": res["throughput_per_s"], "peak_mem_mb": py_mb + jvm_mb}
-        e2e = {k: (values[k], u) for k, u in END_TO_END.items()}
+        attempted = sum(r["attempted"] for r in parts.values())
+        failed = sum(r["failed"] for r in parts.values())
+        values = {"setup_s": harness.median(setup), "peak_mem_mb": py_mb + jvm_mb,
+                  **{ROLE[p]: r["latency_s"] for p, r in parts.items()}}
+        e2e = {k: (values[k], u) for k, u in _end_to_end().items()}
         details = {
             **e2e,
-            **res["details"],
+            **{k: v for r in parts.values() for k, v in r["details"].items()},
             "failed_ratio": (failed / attempted, "ratio"),
             "setup_samples_s": ([round(s, 4) for s in setup], "s"),
             "py_hwm_mb": (py_mb, "MB"),
             "jvm_old_gen_mb": (jvm_mb, "MB"),
+            # where the run's wall time went, set-up sessions included
+            "wall_s": ({k: round(v, 2) for k, v in wall.items()}, "s"),
         }
         if args.trace:
             folded = _fold(log_dir, spans.items)
-            metrics = layers.per_layer(folded, res, setup[-1])
+            metrics = layers.per_layer(folded, parts, setup[-1])
         else:
             metrics = e2e
         record = {
             "workload": args.workload, "seed": args.seed, "seconds": args.seconds,
-            "trace": args.trace, "posture": posture, "inputs": res.get("inputs"),
+            "trace": args.trace, "posture": posture,
+            "inputs": {p: r.get("inputs") for p, r in parts.items()},
             "attempted": attempted, "failed": failed,
-            "problems": res["problems"][:50],
+            "problems": [f"{p}: {x}" for p, r in parts.items() for x in r["problems"]][:50],
             "details": {k: {"value": v, "unit": u} for k, (v, u) in details.items()},
         }
-        _report_overhead(state, record, res)
+        _report_overhead(root, state, record, values)
         print(json.dumps(record, default=str))
         print(json.dumps({
             "correct": failed == 0,
@@ -167,25 +202,54 @@ def _fold(log_dir: str, spans: list[dict]) -> list[dict]:
     return fold.fold(spans, jobs, tasks)
 
 
-def _report_overhead(state: str, record: dict, res: dict) -> None:
-    """Keep each run's headline latency; a traced run reports its
-    overhead against the median of the untraced runs kept so far."""
+def _code_id(root: str) -> str:
+    """Fingerprint of the program and benchmark sources: runs of the
+    same code share it."""
+    h = hashlib.sha1()
+    files = glob.glob(os.path.join(root, "lakeflush_spark", "**", "*.py"), recursive=True)
+    for path in sorted(files + glob.glob(os.path.join(HERE, "*.py"))):
+        h.update(os.path.relpath(path, root).encode())
+        with open(path, "rb") as f:
+            h.update(f.read())
+    return h.hexdigest()[:16]
+
+
+def _report_overhead(root: str, state: str, record: dict, values: dict) -> None:
+    """Keep each run's timed figures. A traced run reports its overhead
+    against the untraced run of the same seed and the same code, and
+    calls it unresolved while it lies within the spread of that code's
+    untraced runs (IQR over median, four runs or more)."""
     keep = os.path.join(state, "results")
     os.makedirs(keep, exist_ok=True)
-    wl = record["workload"]
-    with open(os.path.join(keep, f"{wl}.trace{record['trace']}.jsonl"), "a") as f:
-        f.write(json.dumps({"seed": record["seed"], "latency_s": res["latency_s"]}) + "\n")
+    path = os.path.join(keep, f"{record['workload']}.jsonl")
+    me = {"code": _code_id(root), "seed": record["seed"], "seconds": record["seconds"],
+          "trace": record["trace"], **{k: values[k] for k in TIMED}}
+    kept = []
+    if os.path.exists(path):
+        with open(path) as f:
+            kept = [json.loads(line) for line in f]
+    with open(path, "a") as f:
+        f.write(json.dumps(me) + "\n")
     if not record["trace"]:
         return
-    import harness
-
-    with contextlib.suppress(FileNotFoundError):
-        with open(os.path.join(keep, f"{wl}.trace0.jsonl")) as f:
-            base = harness.median([json.loads(line)["latency_s"] for line in f])
-        record["details"]["tracing_overhead"] = {
-            "value": res["latency_s"] / base - 1.0, "unit": "ratio",
-            "untraced_latency_s": base, "traced_latency_s": res["latency_s"],
-        }
+    same = [r for r in kept if not r["trace"] and r["code"] == me["code"]
+            and r["seconds"] == me["seconds"]]
+    base = [r for r in same if r["seed"] == me["seed"]]
+    for k in TIMED:
+        out = {"unit": "ratio", "traced": me[k]}
+        if not base:
+            out.update(value=None, resolved=False,
+                       why="no untraced run of this seed and code to compare with")
+        else:
+            out.update(value=me[k] / base[-1][k] - 1.0, untraced=base[-1][k])
+            vals = [r[k] for r in same]
+            if len(vals) >= 4:
+                q = statistics.quantiles(vals, n=4)
+                out["untraced_spread"] = (q[2] - q[0]) / statistics.median(vals)
+                out["resolved"] = abs(out["value"]) > out["untraced_spread"]
+            else:
+                out.update(resolved=False, why="fewer than four untraced runs of this code")
+        record["details"][f"tracing_overhead.{k}"] = out
 
 
 if __name__ == "__main__":

@@ -23,7 +23,6 @@ sys.path[:0] = [HERE, ROOT]
 
 import fold  # noqa: E402
 import harness  # noqa: E402
-import layers  # noqa: E402
 
 SPANS = [
     {"name": "a", "layer": "plans", "start": 1000, "end": 2000},
@@ -116,13 +115,17 @@ def test_cent_rounded_sums_compare_to_within_a_cent():
     assert wl_queries._within_a_cent(pd.DataFrame({"k": [2, 1], "revenue": [30.51, 10.24]}), want) == []
     assert wl_queries._within_a_cent(pd.DataFrame({"k": [1, 2], "revenue": [10.25, 30.53]}), want)
     assert wl_queries._within_a_cent(pd.DataFrame({"k": [1, 3], "revenue": [10.25, 30.5]}), want)
+    # the right revenues on the wrong rows
+    assert wl_queries._within_a_cent(pd.DataFrame({"k": [1, 2], "revenue": [30.5, 10.25]}), want)
+    assert wl_queries._within_a_cent(pd.DataFrame({"k": [1, 1], "revenue": [10.25, 30.5]}), want)
 
 
 def test_manifest_matches_the_harness():
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         manifest = json.load(f)
-    assert [(m["name"], m["unit"], m["better"]) for m in manifest["per_layer"]] == layers.SPEC
     import run
 
     assert [w["name"] for w in manifest["workloads"]] == list(run.WORKLOADS)
-    assert {m["name"]: m["unit"] for m in manifest["end_to_end"]} == run.END_TO_END
+    assert {p for parts in run.WORKLOADS.values() for p in parts} == set(run.SHARE) == set(run.ROLE)
+    for parts in run.WORKLOADS.values():
+        assert sorted(run.ROLE[p] for p in parts) == ["batch_s", "stream_s"]

@@ -9,6 +9,7 @@ bundles (codec bound).
 
 from __future__ import annotations
 
+import contextlib
 import gzip
 import hashlib
 import math
@@ -21,9 +22,11 @@ from harness import median
 
 #: collector rotation size; small enough that gzip yields several bundles
 MAX_SIZE_MB = 1
-JSON_FILES = 6000
-CSV_FILES, CSV_ROWS = 360, 800
-WARM_SCALE = 0.2
+JSON_FILES = 2000
+CSV_FILES, CSV_ROWS = 120, 800
+WARM_SCALE = 0.1
+#: (kind, source lake) per collect+deliver call of a round
+KINDS = [("json", "json"), ("csv", "csv"), ("gzip", "csv")]
 
 
 def _digest(lines) -> tuple[int, str]:
@@ -50,7 +53,8 @@ def _make_lakes(root: str, seed: int, scale: float) -> dict:
 
 
 def _compact_once(spans, work: str, lake_dir: str, kind: str, tag: str) -> tuple[float, list[str]]:
-    """Collect and deliver one lake; returns (seconds, delivered paths)."""
+    """Collect and deliver one lake, in spans unless ``spans`` is None;
+    returns (seconds, delivered paths)."""
     from lakeflush_spark.compat.collectors import LocalLakeCollector
     from lakeflush_spark.compat.flushers import LocalLakeFlusher
 
@@ -59,15 +63,16 @@ def _compact_once(spans, work: str, lake_dir: str, kind: str, tag: str) -> tuple
     os.makedirs(coll_dir)
     os.makedirs(dest)
     file_type = "json" if kind == "json" else "csv"
+    span = spans.span if spans else (lambda *a, **k: contextlib.nullcontext())
     t0 = time.perf_counter()
-    with spans.span(f"compat.collect.{kind}", layer="compat", kind=kind):
+    with span(f"compat.collect.{kind}", layer="compat", kind=kind):
         collector = LocalLakeCollector(
             lake_dir, file_type=file_type, csv_header=file_type == "csv",
             filepath=coll_dir, filename="bench", max_size_mb=MAX_SIZE_MB,
             max_time_mins=60, compress=kind == "gzip",
         )
         collector.start()
-    with spans.span("compat.flush", layer="compat", kind=kind):
+    with span("compat.flush", layer="compat", kind=kind):
         LocalLakeFlusher(dest, coll_dir, "bench").poll_once()
     dt = time.perf_counter() - t0
     delivered = sorted(os.path.join(dest, f) for f in os.listdir(dest))
@@ -99,18 +104,21 @@ def _check(kind: str, lake: dict, delivered: list[str], want: tuple) -> tuple[li
     return problems, len(delivered), size
 
 
-def run(ctx) -> dict:
-    spans, work, seed = ctx.spans, ctx.work, ctx.seed
+def warm(ctx) -> dict:
+    """The lakes, and an untimed round over smaller ones."""
+    work, seed = ctx.work, ctx.seed
     lakes = _make_lakes(os.path.join(work, "lakes"), seed, 1.0)
     _make_lakes(os.path.join(work, "warm"), seed + 1, WARM_SCALE)
-    want = {k: _digest(v["records"]) for k, v in lakes.items()}
-    kinds = [("json", "json"), ("csv", "csv"), ("gzip", "csv")]
-
-    for kind, src in kinds:
-        _compact_once(spans, os.path.join(work, "warmout"), os.path.join(work, "warm", src), kind, f"w-{kind}")
+    for kind, src in KINDS:
+        _compact_once(None, os.path.join(work, "warmout"), os.path.join(work, "warm", src), kind, f"w-{kind}")
     shutil.rmtree(os.path.join(work, "warmout"), ignore_errors=True)
-    spans.items.clear()
-    spans.boundary()
+    return {"lakes": lakes}
+
+
+def run(ctx, state: dict) -> dict:
+    spans, work, lakes = ctx.spans, ctx.work, state["lakes"]
+    want = {k: _digest(v["records"]) for k, v in lakes.items()}
+    kinds = KINDS
 
     times: dict[str, list[float]] = {k: [] for k, _ in kinds}
     problems, attempted, failed = [], 0, 0
@@ -136,7 +144,6 @@ def run(ctx) -> dict:
             bundles[kind].append(n_bundles)
             out_bytes[kind].append(size)
         shutil.rmtree(rwork, ignore_errors=True)
-        spans.boundary()
         r += 1
 
     target = MAX_SIZE_MB * 1024 * 1024
@@ -154,9 +161,9 @@ def run(ctx) -> dict:
     }
     for k in ideal:
         details[f"bundle_count_excess.{k}"] = (excess[k], "ratio")
+    details["compact_records_s"] = (records / round_s, "1/s")
     return {
         "latency_s": round_s,
-        "throughput_per_s": records / round_s,
         "attempted": attempted,
         "failed": failed,
         "problems": problems,

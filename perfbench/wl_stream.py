@@ -25,19 +25,19 @@ import pyarrow.dataset as ds
 from harness import median, percentile, progress_batches, supported_percentile
 
 LINES = 20
-#: files per second. The heavy rate is about half the rate the stream
-#: sustained on a shared 4-core host in its slow periods (at 60 files/s
-#: it fell behind there, with p50 latency up to 3.5 s; at quiet speed it
-#: falls behind somewhere between 120 and 300 files/s), so the heavy
-#: phase stays below saturation in both states.
-RATES = {"lo": 4.0, "hi": 30.0}
-WARM_FILES = 30
+#: files per second. On a shared 4-core host the stream fell behind at
+#: 60 files/s in slow periods, and at 30 files/s its latency there
+#: climbed from 0.8 s to 1.1-3.8 s as batches queued; the heavy rate is
+#: half of that, so latency stays about one to two batch costs.
+RATES = {"lo": 4.0, "hi": 15.0}
+WARM_FILES = 15
 
 
-def _gen(here: str, src: str, stage: str, seed: int, start: float, phases, first: int,
-         report: str) -> list[dict]:
+def _gen(ctx, seed: int, start: float, phases, first: int, report: str) -> list[dict]:
     """Run the generator process to completion; returns its report."""
-    cmd = [sys.executable, os.path.join(here, "streamgen.py"), "--src", src, "--stage", stage,
+    report = os.path.join(ctx.work, report)
+    cmd = [sys.executable, os.path.join(os.path.dirname(os.path.abspath(__file__)), "streamgen.py"),
+           "--src", os.path.join(ctx.work, "src"), "--stage", os.path.join(ctx.work, "stage"),
            "--seed", str(seed), "--start", repr(start), "--lines", str(LINES),
            "--first", str(first), "--report", report]
     for p in phases:
@@ -68,33 +68,49 @@ def _commit_times(dest: str) -> dict[int, float]:
     return {int(b): a.timestamp() for b, a in zip(ids, at)}
 
 
-def run(ctx) -> dict:
-    from lakeflush_spark.streaming.compaction import StreamCompactionConfig, compact_stream
+def _config(work: str):
+    from lakeflush_spark.streaming.compaction import StreamCompactionConfig
 
-    spark, spans, seed, work = ctx.spark, ctx.spans, ctx.seed, ctx.work
-    here = os.path.dirname(os.path.abspath(__file__))
-    src, stage = os.path.join(work, "src"), os.path.join(work, "stage")
-    dest = os.path.join(work, "dest")
-    for d in (src, stage):
-        os.makedirs(d)
-    cfg = StreamCompactionConfig(source_dir=src, dest_dir=dest,
-                                 checkpoint_dir=os.path.join(work, "ckpt"),
-                                 max_size_mb=16, exactly_once=True)
-    # the heavy phase gets most of the run: latency_s is mostly its files,
-    # and more batches steady their median
+    return StreamCompactionConfig(source_dir=os.path.join(work, "src"),
+                                  dest_dir=os.path.join(work, "dest"),
+                                  checkpoint_dir=os.path.join(work, "ckpt"),
+                                  max_size_mb=16, exactly_once=True)
+
+
+def warm(ctx) -> dict:
+    """Deliver a burst of warm-up files, then stop the stream: left
+    running, its idle triggers would load the host while other parts
+    are timed."""
+    from lakeflush_spark.streaming.compaction import compact_stream
+
+    for d in ("src", "stage"):
+        os.makedirs(os.path.join(ctx.work, d))
+    query = compact_stream(ctx.spark, _config(ctx.work), available_now=False)
+    try:
+        n_warm = len(_gen(ctx, ctx.seed + 10_000, time.time(), [("warm", WARM_FILES, 1)], 0, "warm.json"))
+        query.processAllAvailable()
+    finally:
+        query.stop()
+    return {"n_warm": n_warm}
+
+
+def run(ctx, state: dict) -> dict:
+    from lakeflush_spark.streaming.compaction import compact_stream
+
+    spans, work, n_warm = ctx.spans, ctx.work, state["n_warm"]
+    dest = _config(work).dest_dir
+    # the heavy phase gets most of the part: its files are most of the
+    # median, and more batches steady it
     phases = [("lo", RATES["lo"], ctx.seconds / 4), ("hi", RATES["hi"], ctx.seconds * 3 / 4)]
 
-    query = compact_stream(spark, cfg, available_now=False)
     problems, attempted, failed = [], 0, 0
+    t_measure = time.time() * 1000
+    query = compact_stream(ctx.spark, _config(work), available_now=False)
     try:
-        n_warm = len(_gen(here, src, stage, seed + 10_000, time.time(), [("warm", WARM_FILES / 2, 2)],
-                          0, os.path.join(work, "warm.json")))
+        # the schedule starts once the restarted stream is up
         query.processAllAvailable()
-        spans.boundary()
-
-        t_measure = time.time() * 1000
         start = time.time() + 0.5
-        landed = _gen(here, src, stage, seed, start, phases, n_warm, os.path.join(work, "gen.json"))
+        landed = _gen(ctx, ctx.seed, start, phases, n_warm, "gen.json")
         query.processAllAvailable()
         batches = progress_batches(query)
     finally:
@@ -132,14 +148,16 @@ def run(ctx) -> dict:
         details[f"rate_{p}"] = (RATES[p], "1/s")
     details["generator_late_p50_s"] = (median(late), "s")
     details["generator_late_max_s"] = (max(late) if late else 0.0, "s")
-    span_s = max(commits.values()) - start
-    for b in (b for b in batches if b["start"] >= t_measure):
+    measured = [b for b in batches if b["start"] >= t_measure]
+    for b in measured:
         spans.items.append({"name": "stream.batch", "layer": "stream_batch", "start": b["start"],
                             "end": b["end"], "rows": b["rows"], "files": b["rows"] / LINES})
+    # what the stream sets, not the schedule: records per second it spent
+    # running non-empty batches
+    busy_s = sum(b["end"] - b["start"] for b in measured if b["rows"]) / 1000
+    details["stream_records_per_busy_s"] = (len(every) * LINES / busy_s if busy_s else 0.0, "1/s")
     return {
         "latency_s": median(every),
-        # delivered records over the schedule's start to the last commit
-        "throughput_per_s": len(every) * LINES / span_s,
         "attempted": attempted,
         "failed": failed,
         "problems": problems,
