@@ -49,7 +49,7 @@ WORKLOADS = {
 ROLE = {"lake_compact": "batch_s", "stream_compact": "stream_s",
         "query_suite": "batch_s", "stream_curate": "stream_s"}
 #: share of ``--seconds`` each part measures for
-SHARE = {"lake_compact": 0.3, "stream_compact": 0.7, "query_suite": 0.4, "stream_curate": 0.6}
+SHARE = {"lake_compact": 0.2, "stream_compact": 0.8, "query_suite": 0.4, "stream_curate": 0.6}
 #: fresh-JVM ``get_spark`` calls per run; ``setup_s`` is their median
 SETUP_SAMPLES = 3
 #: the timed figures a traced run is compared on

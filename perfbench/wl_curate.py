@@ -19,19 +19,23 @@ import pyarrow.parquet as pq
 import datagen
 from harness import median, progress_batches
 
-DOCS_PER_FILE = 60
-#: files of the warm-up stream. With one file the measured batches were
-#: still speeding up (by up to 30% from first to last) as the JIT warmed;
-#: with three they were flat, but the warm-up stream runs beside the query
-#: suite's cold pass and both hold the Python driver, so it added 10-15 s
-#: to every run.
-WARM_FILES = 2
-#: measured files per second of the part's time, and at least five. A
-#: batch is mostly fixed per-batch cost (about 44 Spark jobs, most of its
-#: time on the driver): 1-2 s on a quiet 4-core host, 4.5-5 s on a slow
-#: one. After the warm-up stream the measured stream's first batch costs
-#: what the others do, so every measured batch is timed.
-FILES_PER_SECOND = 1.0
+#: documents per file. A batch is mostly fixed per-batch cost (about 43
+#: Spark jobs, two thirds of its time on the driver), so halving the
+#: documents from 60 trimmed a batch by under 10% and bought the run its
+#: third warm-up file.
+DOCS_PER_FILE = 30
+#: files of the warm-up stream. A fresh JVM keeps compiling for a minute
+#: or more: on a 4-core host a cold stream's batches fell from 5.2 s to
+#: about 4.0 s over its first ten and to 3.5 s by its sixteenth. After two
+#: warm-up files the measured batches still sat on that slope, and ten
+#: seeds' medians spread by up to 0.29 of their median; after three (run
+#: beside the query suite's cold pass, which holds the cores too) the
+#: batches within a run agree to a few per cent.
+WARM_FILES = 3
+#: measured files per second of the part's time, and at least five.
+#: After the warm-up stream the measured stream's first batch costs what
+#: the others do, so every measured batch is timed.
+FILES_PER_SECOND = 0.7
 MIN_FILES = 5
 SEM_DUP_SHARE = 0.05
 

@@ -44,8 +44,10 @@ SUITE = [
 #: row, and each row's float columns must agree to within one cent.
 CENT_ROUNDED = {"q05_multiway_join_topk"}
 CENT = 0.01 + 1e-9
-#: queries checked at once in the cold pass
-CHECK_THREADS = 3
+#: queries checked at once in the cold pass. Two leave the curation
+#: warm-up beside it more of the cores than three did, so the two
+#: warm-ups end sooner together.
+CHECK_THREADS = 2
 
 
 def _within_a_cent(got, want) -> list[str]:

@@ -30,7 +30,12 @@ LINES = 20
 #: climbed from 0.8 s to 1.1-3.8 s as batches queued; the heavy rate is
 #: half of that, so latency stays about one to two batch costs.
 RATES = {"lo": 4.0, "hi": 15.0}
-WARM_FILES = 15
+#: seconds of the warm-up schedule, at the heavy rate. A fresh JVM keeps
+#: compiling for a minute or more, and a one-second burst gave the stream
+#: only a few batches before the measured schedule; the ten or so paced
+#: ones leave it further down that slope. The warm-up runs beside the
+#: lake part's, so it costs the run little.
+WARM_SECONDS = 4.0
 
 
 def _gen(ctx, seed: int, start: float, phases, first: int, report: str) -> list[dict]:
@@ -78,16 +83,16 @@ def _config(work: str):
 
 
 def warm(ctx) -> dict:
-    """Deliver a burst of warm-up files, then stop the stream: left
-    running, its idle triggers would load the host while other parts
-    are timed."""
+    """Deliver a warm-up schedule at the heavy rate, then stop the
+    stream: left running, its idle triggers would load the host while
+    other parts are timed."""
     from lakeflush_spark.streaming.compaction import compact_stream
 
     for d in ("src", "stage"):
         os.makedirs(os.path.join(ctx.work, d))
     query = compact_stream(ctx.spark, _config(ctx.work), available_now=False)
     try:
-        n_warm = len(_gen(ctx, ctx.seed + 10_000, time.time(), [("warm", WARM_FILES, 1)], 0, "warm.json"))
+        n_warm = len(_gen(ctx, ctx.seed + 10_000, time.time(), [("warm", RATES["hi"], WARM_SECONDS)], 0, "warm.json"))
         query.processAllAvailable()
     finally:
         query.stop()
